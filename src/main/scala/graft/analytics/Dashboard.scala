@@ -58,12 +58,15 @@ object Dashboard {
       round(nanToNull(stddev_samp(col("valor_transacao"))), 4).as("valor_std"))
 
   /** P18/W2 — z-score of value vs the payer's own distribution, as window
-    * exprs attached to every row (no agg+re-join needed).
+    * exprs attached to every row (no agg+re-join needed). A payer whose
+    * values are all equal has stddev 0: its z-score is null (SQL `x/0`),
+    * not a DIVIDE_BY_ZERO failure of the whole query under ANSI.
     */
   def zScorePerRow(scored: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("id_usuario_pagador"))
     val mu = avg(col("valor_transacao")).over(w)
-    val sd = nanToNull(stddev_samp(col("valor_transacao")).over(w))
+    val sd0 = nanToNull(stddev_samp(col("valor_transacao")).over(w))
+    val sd = when(sd0 =!= 0, sd0)
     scored.select(
       col("id_transacao"),
       round((col("valor_transacao") - mu) / sd, 4).as("z_score"))

@@ -5,7 +5,7 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** Structured-Streaming surface of the engine (SURVEY.md §2.8–§2.9).
   *
@@ -88,6 +88,74 @@ object StreamingJob {
     out
   }
 
+  /** The file-replay harness every durable loop in this module runs
+    * on — a replayable file source feeding idempotent per-batch sinks,
+    * the pattern Structured Streaming's exactly-once design rests on:
+    *
+    *  - `dir` is a per-process scratch dir, cleared on construction: a
+    *    re-run in THIS process overwrites its own previous output, while
+    *    another process (e.g. the bench running beside an oracle check)
+    *    can never delete files this one is still lazily reading — which
+    *    is also why it is NOT deleted at the end;
+    *  - [[replay]] stages a static input as `nFiles` parquet files under
+    *    `in/` and streams them back `filesPerTrigger` files per trigger,
+    *    so a run has real micro-batches, not one AvailableNow batch. The
+    *    defaults, 4 files at 2 per trigger, are the r9 admission size
+    *    for chunking-invariant loops (per-doc or per-merge work against
+    *    frozen or summed state): half the per-trigger fixed floor of
+    *    1 file per trigger, for an identical drained result;
+    *  - [[drain]] starts a writer under [[startLocked]] with its
+    *    checkpoint at `ckpt/` and an AvailableNow trigger, awaits it,
+    *    and runs `onFailure` before rethrowing a failed stream;
+    *  - [[probe]] is the stateless stream–static probe family: each
+    *    batch's result overwrites its own `out/ingest=<batchId>`
+    *    partition (the [[graft.io.IdempotentBatchSink]] pattern, so an
+    *    at-least-once redelivery replaces rather than duplicates), and
+    *    the drained union is read back.
+    */
+  private final class FileReplay(workDir: String) {
+    val dir = s"$workDir-${ProcessHandle.current().pid()}"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+
+    def replay(input: DataFrame, nFiles: Int = 4,
+               filesPerTrigger: Int = 2): DataFrame = {
+      input.repartition(nFiles).write.parquet(s"$dir/in")
+      input.sparkSession.readStream.schema(input.schema)
+        .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
+    }
+
+    def drain(writer: DataStreamWriter[Row],
+              onFailure: => Unit = ()): StreamingQuery = {
+      val q = startLocked(writer
+        .option("checkpointLocation", s"$dir/ckpt")
+        .trigger(Trigger.AvailableNow())
+        .start())
+      try q.awaitTermination()
+      catch { case t: Throwable => onFailure; throw t }
+      q
+    }
+
+    def drainBatches(stream: DataFrame, onFailure: => Unit = ())
+                    (f: (DataFrame, Long) => Unit): StreamingQuery =
+      drain(stream.writeStream.outputMode("append").foreachBatch(f),
+        onFailure)
+
+    /** `release` runs once the stream has drained or failed — where a
+      * loop unpins the frozen static state its batches probe, so a
+      * failed trigger cannot leak it into a long-lived session's cache.
+      */
+    def probe(queries: DataFrame, filesPerTrigger: Int = 2,
+              release: => Unit = ())
+             (perBatch: DataFrame => DataFrame): DataFrame = {
+      try drainBatches(replay(queries, filesPerTrigger = filesPerTrigger)) {
+        (batch, batchId) =>
+          perBatch(batch).write.mode("overwrite")
+            .parquet(s"$dir/out/ingest=$batchId")
+      } finally release
+      queries.sparkSession.read.parquet(s"$dir/out").drop("ingest")
+    }
+  }
+
   /** Append-mode twin of [[runToMemory]] backed by the parquet file
     * sink: rows land executor-parallel instead of being collected
     * row-by-row onto the driver (the memory sink's addBatch was ~80%
@@ -96,21 +164,10 @@ object StreamingJob {
     * memory sink: the file sink is append-only.
     */
   def runToParquet(stream: DataFrame, workDir: String): DataFrame = {
-    val spark = stream.sparkSession
-    // per-process suffix: a re-run in THIS process overwrites its own
-    // previous output, while another process (e.g. the bench running
-    // beside an oracle check) can never delete files this one is still
-    // lazily reading
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    val out = s"$dir/out"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    val q = startLocked(stream.writeStream.format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", s"$dir/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start())
-    q.awaitTermination()
+    val run = new FileReplay(workDir)
+    val out = s"${run.dir}/out"
+    run.drain(stream.writeStream.format("parquet").option("path", out)
+      .outputMode("append"))
     // a zero-row stream commits no DATA files — but never an empty
     // DIR: FileStreamSink mkdirs `out/_spark_metadata` at query
     // start, so a listFiles() null-check is always false and
@@ -118,7 +175,7 @@ object StreamingJob {
     // Read with the stream's own schema instead: zero committed files
     // then correctly resolve to the empty result, mirroring
     // runToMemory.
-    spark.read.schema(stream.schema).parquet(out)
+    stream.sparkSession.read.schema(stream.schema).parquet(out)
   }
 
   /** T1/T3/T6-style console metrics stream (O6): second concurrent
@@ -219,28 +276,18 @@ object StreamingJob {
     require(nFiles <= 64,
       s"nFiles=$nFiles exceeds the recentProgress retention window")
     import graft.etl.{ScoringPipeline, TestdataAdapter}
-    val in = s"$workDir/in"
-    val ckpt = s"$workDir/ckpt"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(workDir))
-    val ev = graft.Tables.events(spark, sfDir).repartition(nFiles)
-    ev.write.mode("overwrite").parquet(in)
+    val run = new FileReplay(workDir)
     // deliberately 1 file per trigger: this method MEASURES the
     // steady-state per-batch rate over many batches — batch size is
     // the experiment's controlled variable, not a floor to optimize
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
+    val stream = run.replay(graft.Tables.events(spark, sfDir), nFiles,
+      filesPerTrigger = 1)
     val scored = ScoringPipeline.score(
       ScoringPipeline.enrich(TestdataAdapter.transactionsFromEvents(stream),
         TestdataAdapter.users(spark, sfDir),
         TestdataAdapter.regions(spark, sfDir)),
       TestdataAdapter.eventLimitArms)
-    val q = startLocked(scored.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (df: DataFrame, _: Long) => df.count(); () }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    q.awaitTermination()
+    val q = run.drainBatches(scored) { (df, _) => df.count(); () }
     val steady = q.recentProgress.filter(_.numInputRows > 0).drop(1)
     val rows = steady.map(_.numInputRows).sum
     val secs = steady
@@ -301,35 +348,25 @@ object StreamingJob {
   }
 
   /** Drive [[mergeIntoMv]] from a file stream over the events table
-    * (split into `nFiles` single-file micro-batches), then read the
+    * (split into 6 files, replayed 2 per trigger), then read the
     * maintained view back. The driver-contract query on top checks the
     * N-merge result against the one-pass batch oracle.
     */
   def incrementalMv(spark: SparkSession, sfDir: String,
-                    workDir: String, nFiles: Int = 6,
-                    filesPerTrigger: Int = 2): DataFrame = {
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    val in = s"$dir/in"
-    val mv = s"$dir/mv"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+                    workDir: String): DataFrame = {
+    val run = new FileReplay(workDir)
+    val mv = s"${run.dir}/mv"
     // only the columns the MV consumes: staging the wide events row
     // (the props JSON string dominates its bytes) tripled the cost of
     // an exercise that is about merge mechanics, not scan width
     val ev = graft.Tables.events(spark, sfDir)
-      .select(col("event_type"), col("value")).repartition(nFiles)
-    ev.write.mode("overwrite").parquet(in)
+      .select(col("event_type"), col("value"))
     // 2 files per trigger (r9): still a multi-merge exercise (3
     // merges over 6 files) at half the per-trigger floor; the merged
     // MV is a sum, invariant to chunking, oracle-pinned
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(in)
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, _: Long) => mergeIntoMv(batch, mv) }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    q.awaitTermination()
+    run.drainBatches(run.replay(ev, nFiles = 6)) { (batch, _) =>
+      mergeIntoMv(batch, mv)
+    }
     spark.read.parquet(mv).select("event_type", "n", "sum_value")
   }
 
@@ -350,29 +387,19 @@ object StreamingJob {
                             id: String, text: String, n: Int,
                             threshold: Double, workDir: String,
                             nFiles: Int = 4): DataFrame = {
-    val s = corpus.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    corpus.repartition(nFiles).write.parquet(s"$dir/in")
+    val run = new FileReplay(workDir)
+    val ix = s"${run.dir}/ix"
     // deliberately NOT on the r9 2-files-per-trigger default: this
     // loop's output is (in_doc, corpus_doc) probe hits, whose
     // ORIENTATION depends on batch composition (a same-batch pair
     // emits both directions, a cross-batch pair only later→earlier) —
     // re-chunking would change the drained rows the oracle pins
-    val stream = s.readStream.schema(corpus.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.dedup.Dedup.bandIndexIngestBatch(batch, id, text, n,
-          s"$dir/ix", batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    q.awaitTermination()
-    graft.dedup.Dedup.bandIndexProbe(probeDocs, id, text, n,
-      s"$dir/ix", threshold)
+    run.drainBatches(run.replay(corpus, nFiles, filesPerTrigger = 1)) {
+      (batch, batchId) =>
+        graft.dedup.Dedup.bandIndexIngestBatch(batch, id, text, n, ix,
+          batchId)
+    }
+    graft.dedup.Dedup.bandIndexProbe(probeDocs, id, text, n, ix, threshold)
   }
 
   /** Streaming drift monitor — the incremental twin of the batch
@@ -387,27 +414,15 @@ object StreamingJob {
     * Per-trigger cost: O(batch) + a groups-sized merge.
     */
   def streamDriftMonitor(spark: SparkSession, sfDir: String,
-                         workDir: String, nFiles: Int = 4,
-                         filesPerTrigger: Int = 2): DataFrame = {
+                         workDir: String): DataFrame = {
     import graft.functions.Drift
     val (lo, hi, nBins) = (0.0, 500.0, 10)
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    val mv = s"$dir/counts"
-    ev.filter(col("event_id") % 2 === 1)
-      .repartition(nFiles).write.parquet(s"$dir/in")
-    // 2 files per trigger — the r9 admission-size default for
-    // chunking-invariant loops (per-doc/per-merge work against frozen
-    // or summed state): half the per-trigger fixed floor, identical
-    // drained result, oracle-pinned
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    val run = new FileReplay(workDir)
+    val mv = s"${run.dir}/counts"
+    run.drainBatches(run.replay(ev.filter(col("event_id") % 2 === 1))) {
+      (batch, _) =>
         val partial = Drift.binCounts(batch, "event_type", "value",
           lo, hi, nBins)
         val existing =
@@ -425,10 +440,7 @@ object StreamingJob {
           .partitionBy("g").parquet(mv)
         merged.unpersist()
         ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    q.awaitTermination()
+    }
     Drift.psiOfCounts(
       Drift.binCounts(ev.filter(col("event_id") % 2 === 0),
         "event_type", "value", lo, hi, nBins),
@@ -453,12 +465,10 @@ object StreamingJob {
     */
   def streamLabelMaintenance(docs: DataFrame, id: String, text: String,
                              n: Int, threshold: Double, workDir: String,
-                             nFiles: Int = 4, nBuckets: Int = 16,
                              filesPerTrigger: Int = 2): DataFrame = {
     val s = docs.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    docs.repartition(nFiles).write.parquet(s"$dir/in")
+    val run = new FileReplay(workDir)
+    val dir = run.dir
     // the keeper twin's admission-size discipline (r9): per trigger
     // this loop pays a fixed floor — signature pass, two index
     // writes, the queue commit — so the 2-files-per-trigger default
@@ -466,19 +476,18 @@ object StreamingJob {
     // labeling is a pure function of the union edge set, and the
     // spec pins drained ≡ scratch under any chunking). Callers that
     // want to exercise per-trigger admission cadence pass 1.
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
+    val stream = run.replay(docs, filesPerTrigger = filesPerTrigger)
     // Label merging runs as a SERIALIZED BACKGROUND fold, off the
     // trigger's critical path: ingest and edge discovery are the
     // latency-critical admission work, while the label table is an
     // eventually-consistent derived view — exactly how a production
     // maintenance loop schedules it. Correctness:
-    //  · the trigger writes its edge set DURABLY to
-    //    `labels_queue/batch=<id>` (idempotent overwrite) against
+    //  · the trigger writes its edge set DURABLY to its
+    //    [[DurableFoldQueue]] dir (idempotent overwrite) against
     //    exactly the index state its own ingest produced, BEFORE the
     //    batch commits — so a crash between commit and fold loses
     //    nothing: [[recoverPendingLabelMerges]] folds any unmarked
-    //    queue partition on restart (component merging is
+    //    queue dir on restart (component merging is
     //    order-independent — the union graph's components don't
     //    depend on edge arrival order — so recovery needs no
     //    coordination with live batches beyond the single-writer
@@ -487,52 +496,28 @@ object StreamingJob {
     //    entry point, exercised directly by the crash-injection
     //    specs, not called here;
     //  · folds execute one at a time, COALESCED ([[FoldScheduler]]):
-    //    each fold takes every `_SUCCESS`-committed, unmarked queue
-    //    partition at once — exact, because the final labeling is a
-    //    pure function of the union edge set — and marks them
-    //    `_MERGED` only after the labels write lands;
+    //    each fold takes every pending queue dir at once — exact,
+    //    because the final labeling is a pure function of the union
+    //    edge set;
     //  · the drain runs one last fold for any coalesced-away batch,
     //    awaits it, and a fold failure fails the query.
     // At-least-once replay: a redelivered batch overwrites its own
-    // queue partition and labelsMerge is a fixpoint under duplicates.
+    // queue dir and labelsMerge is a fixpoint under duplicates.
     // minPending=1 at the 2-files-per-trigger cadence (the s30
-    // setting): only ~nFiles/2 triggers arrive, so fold as soon as
-    // the fold thread is idle rather than waiting for a pair that
-    // may only show up at drain time
-    val folder = new FoldScheduler(() => { foldLabelQueue(s, dir, nBuckets); () },
-      () => pendingLabelParts(dir).size,
-      minPending = if (filesPerTrigger >= 2) 1 else 2)
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        folder.failIfBroken()
-        // fused ingest+probe: one signature pass per trigger serves
-        // both index writes and the probe — see
-        // Dedup.bandIndexIngestProbeBatch
-        val part = s"$dir/labels_queue/batch=$batchId"
-        // cast to long at the WRITE (the keeper twin's discipline):
-        // the fold reads the queue with a hard BIGINT schema, and an
-        // int32 id column would otherwise commit INT32 parquet the
-        // vectorized reader refuses to widen; a value that does NOT
-        // cast fails the trigger loudly (longIdOrFail) instead of
-        // nulling into a row the fold would silently drop
-        graft.dedup.Dedup.bandIndexIngestProbeBatch(batch,
-            id, text, n, s"$dir/ix", batchId, threshold)
-          .filter(col("in_doc") =!= col("corpus_doc"))
-          .select(longIdOrFail(least(col("in_doc"), col("corpus_doc")),
-              "label-maintenance edge").as("a"),
-            longIdOrFail(greatest(col("in_doc"), col("corpus_doc")),
-              "label-maintenance edge").as("b"))
-          .distinct()
-          .write.mode("overwrite").parquet(part)
-        folder.submit()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    try q.awaitTermination()
-    catch { case t: Throwable => folder.abort(); throw t }
+    // setting): only ~2 triggers arrive, so fold as soon as the fold
+    // thread is idle rather than waiting for a pair that may only
+    // show up at drain time
+    val queue = new DurableFoldQueue(s"$dir/labels_queue")
+    val folder = queue.scheduler(s, "label-fold",
+      minPending = if (filesPerTrigger >= 2) 1 else 2)(
+      labelFold(s, dir, MaintenanceBuckets))
+    run.drainBatches(stream, folder.abort()) { (batch, batchId) =>
+      folder.failIfBroken()
+      maintenanceEdges(batch, id, text, n, threshold, dir, batchId,
+          "label-maintenance edge")
+        .write.mode("overwrite").parquet(queue.batchDir(batchId))
+      folder.submit()
+    }
     folder.drain()
     // a corpus with NO near-dup pairs drains without labelsMerge ever
     // creating the table (empty edge sets return before the write) —
@@ -541,6 +526,34 @@ object StreamingJob {
     graft.dedup.Dedup.readLabelsOrEmpty(s, s"$dir/labels")
       .select(col("doc"), col("component"))
   }
+
+  /** Hash buckets of the label and curation tables the two maintenance
+    * loops keep.
+    */
+  private val MaintenanceBuckets = 16
+
+  /** One maintenance trigger's fused ingest+probe — one signature pass
+    * serves both index writes under `dir/ix` and the probe (see
+    * [[graft.dedup.Dedup.bandIndexIngestProbeBatch]]) — returning the
+    * batch's distinct near-dup edges as (a < b) BIGINT pairs. Cast to
+    * long at the WRITE: the folds read their queue with a hard BIGINT
+    * schema, and an int32 id column would otherwise commit INT32
+    * parquet the vectorized reader refuses to widen; a value that does
+    * NOT cast fails the trigger loudly ([[longIdOrFail]], `ctx` names
+    * the loop) instead of nulling into a row the fold would silently
+    * drop.
+    */
+  private def maintenanceEdges(batch: DataFrame, id: String, text: String,
+                               n: Int, threshold: Double, dir: String,
+                               batchId: Long, ctx: String): DataFrame =
+    graft.dedup.Dedup.bandIndexIngestProbeBatch(batch,
+        id, text, n, s"$dir/ix", batchId, threshold)
+      .filter(col("in_doc") =!= col("corpus_doc"))
+      .select(longIdOrFail(least(col("in_doc"), col("corpus_doc")), ctx)
+          .as("a"),
+        longIdOrFail(greatest(col("in_doc"), col("corpus_doc")), ctx)
+          .as("b"))
+      .distinct()
 
   /** Cast an id to BIGINT for a maintenance-queue write, failing the
     * trigger LOUDLY when the value does not cast (including null
@@ -625,6 +638,64 @@ object StreamingJob {
     }
   }
 
+  /** The durable queue between a maintenance loop's triggers and its
+    * serialized background fold, rooted at `root`:
+    *
+    *  - a trigger commits its batch to [[batchDir]] as ONE parquet write
+    *    (idempotent overwrite) BEFORE the batch commits. The
+    *    committer's `_SUCCESS` is the completeness marker: a torn,
+    *    never-committed dir is skipped — its trigger never committed
+    *    either, so the stream redelivers over it;
+    *  - pending = every subdirectory with `_SUCCESS` and no `_MERGED`,
+    *    whatever its name and in no particular order: each fold is
+    *    exact over the UNION of its batches, so order cannot matter;
+    *  - [[fold]] hands ALL pending dirs to one `merge` under the job
+    *    description `desc`, then marks each `_MERGED` — only after the
+    *    merge has landed, so a merge that throws marks nothing and the
+    *    next fold (or a crash-recovery call) retries the same batches.
+    *    The merges are fixpoints, so a refold after a lost marker lands
+    *    the same bytes. Returns how many dirs it folded; a fold finding
+    *    nothing pending is a no-op.
+    */
+  private[graft] final class DurableFoldQueue(root: String) {
+    def batchDir(batchId: Long): String = s"$root/b$batchId"
+
+    def pending: Seq[java.io.File] =
+      Option(new java.io.File(root).listFiles()).toSeq.flatten
+        .filter(d => new java.io.File(d, "_SUCCESS").exists() &&
+          !new java.io.File(d, "_MERGED").exists())
+
+    def fold(s: SparkSession, desc: String)
+            (merge: Seq[String] => Unit): Int =
+      withJobDescription(s, desc) {
+        val dirs = pending
+        if (dirs.nonEmpty) {
+          merge(dirs.map(_.getPath))
+          dirs.foreach(d => new java.io.File(d, "_MERGED").createNewFile())
+        }
+        dirs.size
+      }
+
+    /** A [[FoldScheduler]] running [[fold]], gated on [[pending]]. */
+    def scheduler(s: SparkSession, desc: String, minPending: Int)
+                 (merge: Seq[String] => Unit): FoldScheduler =
+      new FoldScheduler(() => { fold(s, desc)(merge); () },
+        () => pending.size, minPending)
+  }
+
+  /** Scope a thread-local job description: label this block's jobs in
+    * the UI / job profiles, then RESTORE — the description is caller-
+    * thread state, and the recovery entry points run on whatever
+    * thread called them (leaving it set would mislabel every later
+    * job on that thread).
+    */
+  private def withJobDescription[T](s: SparkSession, desc: String)
+                                   (body: => T): T = {
+    val before = s.sparkContext.getLocalProperty("spark.job.description")
+    s.sparkContext.setJobDescription(desc)
+    try body finally s.sparkContext.setJobDescription(before)
+  }
+
   /** Streaming CANONICAL-KEEPER maintenance — the layer above
     * [[streamLabelMaintenance]]: each micro-batch's fused ingest+probe
     * discovers the delta's near-dup edges, and one
@@ -648,14 +719,13 @@ object StreamingJob {
     * with every coalesced delta's q in hand — so folding batches
     * {1,2,3} together lands byte-identical state to folding them one
     * by one. Durability mirrors s18: each trigger writes its edge set
-    * AND its delta's (doc, q) rows to `queue/b<id>` as ONE
-    * union-schema parquet commit BEFORE the batch commits — the
-    * committer's `_SUCCESS` is the completeness marker (one atomic
-    * commit replaced the r7 two-write + `_READY` protocol: a
+    * AND its delta's (doc, q) rows to its [[DurableFoldQueue]] dir as
+    * ONE union-schema parquet commit BEFORE the batch commits (one
+    * atomic commit replaced the r7 two-write + `_READY` protocol: a
     * coalesced fold can never list a half-committed batch because
-    * the batch IS one commit). A fold marks its batches `_MERGED`
-    * only after the merge lands; [[recoverPendingKeeperMerges]]
-    * refolds unmarked batches (idempotent fixpoint).
+    * the batch IS one commit). A fold marks its batches merged only
+    * after the merge lands; [[recoverPendingKeeperMerges]] refolds
+    * unmarked batches (idempotent fixpoint).
     *
     * Ids must be integral (the [[graft.dedup.Dedup
     * .connectedComponents]] contract this composes with): the queue
@@ -664,69 +734,49 @@ object StreamingJob {
     * row the fold would drop.
     */
   def streamKeeperMaintenance(docs: DataFrame, id: String, text: String,
-                              n: Int, threshold: Double, workDir: String,
-                              nFiles: Int = 4,
-                              nBuckets: Int = 16,
-                              filesPerTrigger: Int = 2): DataFrame = {
+                              n: Int, threshold: Double,
+                              workDir: String): DataFrame = {
     val s = docs.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    docs.repartition(nFiles).write.parquet(s"$dir/in")
-    // filesPerTrigger is Spark's own admission-size knob
+    val run = new FileReplay(workDir)
+    val dir = run.dir
+    // 2 files per trigger via Spark's own admission-size knob
     // (maxFilesPerTrigger): per trigger this loop pays a fixed floor —
     // signature pass, two index writes, the queue commit — so batch
     // size trades admission latency against per-doc cost. Both
-    // maintenance loops default to 2 files per trigger (r9: s18
-    // adopted this loop's cadence; its per-trigger admission story
-    // is spec-pinned at filesPerTrigger=1 instead of paid for in
-    // every bench sweep). Drained state is identical under any
-    // chunking (spec-pinned: the oracle is the scratch recompute).
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
+    // maintenance loops admit 2 files per trigger (r9: s18 adopted
+    // this loop's cadence); the 1-file admission cadence is
+    // spec-pinned on the label loop (and the hybrid probe), not paid
+    // for in every bench sweep. Drained state is identical under any
+    // chunking (the folds coalesce exactly; the oracle is the scratch
+    // recompute).
+    val stream = run.replay(docs)
     // minPending=1: at the 2-files-per-trigger cadence there are only
-    // ~nFiles/2 batches — fold each as soon as the fold thread is
-    // idle, so the fold genuinely races the next trigger (since r9
-    // the label loop runs the identical cadence and threshold; at a
-    // 1-file cadence both fall back to the pair threshold)
-    val folder = new FoldScheduler(() => { foldKeeperQueue(s, dir, nBuckets); () },
-      () => pendingKeeperParts(dir).size, minPending = 1)
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        folder.failIfBroken()
-        // one signature pass serves index writes and edge discovery;
-        // edges and the (doc, q) delta land as ONE union-schema
-        // parquet commit (edge rows carry null doc/q, delta rows null
-        // a/b) — one write job where r7 spent two plus a hand-rolled
-        // `_READY` marker, and the committer's atomic `_SUCCESS` now
-        // IS the fold-eligibility gate
-        val part = s"$dir/queue/b$batchId"
-        val edges = graft.dedup.Dedup.bandIndexIngestProbeBatch(batch,
-            id, text, n, s"$dir/ix", batchId, threshold)
-          .filter(col("in_doc") =!= col("corpus_doc"))
-          .select(longIdOrFail(least(col("in_doc"), col("corpus_doc")),
-              "keeper-maintenance edge").as("a"),
-            longIdOrFail(greatest(col("in_doc"), col("corpus_doc")),
-              "keeper-maintenance edge").as("b"))
-          .distinct()
-          .select(col("a"), col("b"), lit(null).cast("long").as("doc"),
-            lit(null).cast("double").as("q"))
-        // longIdOrFail: a doc id that does not cast would otherwise
-        // null out and be dropped by the fold's doc.isNotNull filter —
-        // a document silently missing from keeper state
-        val delta = batch.select(lit(null).cast("long").as("a"),
-          lit(null).cast("long").as("b"),
-          longIdOrFail(col(id), "keeper-maintenance delta").as("doc"),
-          round(graft.text.Text.qualityScore(col(text)), 6).as("q"))
-        edges.unionByName(delta).write.mode("overwrite").parquet(part)
-        folder.submit()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    try q.awaitTermination()
-    catch { case t: Throwable => folder.abort(); throw t }
+    // ~2 batches — fold each as soon as the fold thread is idle, so
+    // the fold genuinely races the next trigger (the label loop runs
+    // the identical cadence and threshold)
+    val queue = new DurableFoldQueue(s"$dir/queue")
+    val folder = queue.scheduler(s, "keeper-fold", minPending = 1)(
+      keeperFold(s, dir, MaintenanceBuckets))
+    run.drainBatches(stream, folder.abort()) { (batch, batchId) =>
+      folder.failIfBroken()
+      // edges and the (doc, q) delta land as ONE union-schema parquet
+      // commit (edge rows carry null doc/q, delta rows null a/b) — one
+      // write job, whose atomic commit is the fold-eligibility gate
+      val edges = maintenanceEdges(batch, id, text, n, threshold, dir,
+          batchId, "keeper-maintenance edge")
+        .select(col("a"), col("b"), lit(null).cast("long").as("doc"),
+          lit(null).cast("double").as("q"))
+      // longIdOrFail: a doc id that does not cast would otherwise
+      // null out and be dropped by the fold's doc.isNotNull filter —
+      // a document silently missing from keeper state
+      val delta = batch.select(lit(null).cast("long").as("a"),
+        lit(null).cast("long").as("b"),
+        longIdOrFail(col(id), "keeper-maintenance delta").as("doc"),
+        round(graft.text.Text.qualityScore(col(text)), 6).as("q"))
+      edges.unionByName(delta).write.mode("overwrite")
+        .parquet(queue.batchDir(batchId))
+      folder.submit()
+    }
     folder.drain()
     // explicit schema: an all-empty stream leaves a keeper table with
     // zero part files, where "no keepers" is the answer, not an
@@ -738,53 +788,16 @@ object StreamingJob {
         col("n_members"))
   }
 
-  /** Fold EVERY committed-but-unmerged keeper-queue batch in one
+  /** Fold committed keeper-queue dirs in ONE
     * [[graft.dedup.Dedup.curationMerge]] (exact — see
-    * [[streamKeeperMaintenance]]), then mark them `_MERGED`. Eligible
-    * = the committer's `_SUCCESS` exists (a torn, never-committed
-    * batch is skipped: its trigger never committed either, so the
-    * stream redelivers over it) and `_MERGED` does not. All pending
-    * batches are read as ONE multi-path scan with an explicit schema
-    * (a union-schema parquet dir holds edge rows and delta rows —
-    * split back by null pattern). Serialized by the caller's
-    * [[FoldScheduler]]; a fold finding nothing pending is a no-op.
-    * Returns how many batches it folded.
+    * [[streamKeeperMaintenance]]). All dirs are read as ONE multi-path
+    * scan with an explicit schema (a union-schema parquet dir holds
+    * edge rows and delta rows — split back by null pattern).
     */
-  /** Committed (`_SUCCESS`), unmerged keeper-queue batch dirs. */
-  private def pendingKeeperParts(dir: String): Seq[java.io.File] = {
-    val qd = new java.io.File(s"$dir/queue")
-    if (!qd.exists()) return Seq.empty
-    qd.listFiles().toSeq.filter(_.isDirectory)
-      .filter(d => new java.io.File(d, "_SUCCESS").exists() &&
-        !new java.io.File(d, "_MERGED").exists())
-      .sortBy(_.getName)
-  }
-
-  private def foldKeeperQueue(s: SparkSession, dir: String,
-                              nBuckets: Int): Int =
-    withJobDescription(s, "keeper-fold") {
-      foldKeeperQueueInner(s, dir, nBuckets)
-    }
-
-  /** Scope a thread-local job description: label this block's jobs in
-    * the UI / job profiles, then RESTORE — the description is caller-
-    * thread state, and the recovery entry points run on whatever
-    * thread called them (leaving it set would mislabel every later
-    * job on that thread).
-    */
-  private def withJobDescription[T](s: SparkSession, desc: String)
-                                   (body: => T): T = {
-    val before = s.sparkContext.getLocalProperty("spark.job.description")
-    s.sparkContext.setJobDescription(desc)
-    try body finally s.sparkContext.setJobDescription(before)
-  }
-
-  private def foldKeeperQueueInner(s: SparkSession, dir: String,
-                                   nBuckets: Int): Int = {
-    val pending = pendingKeeperParts(dir)
-    if (pending.isEmpty) return 0
+  private def keeperFold(s: SparkSession, dir: String, nBuckets: Int)
+                        (parts: Seq[String]): Unit = {
     val rows = s.read.schema("a BIGINT, b BIGINT, doc BIGINT, q DOUBLE")
-      .parquet(pending.map(_.getPath).toSeq: _*)
+      .parquet(parts: _*)
     // pairsPinned: the queue IS durable materialized edge state — its
     // consumers re-scan a tiny parquet leaf (cheaper than a whole
     // re-checkpoint pass per fold)
@@ -792,73 +805,43 @@ object StreamingJob {
       rows.filter(col("a").isNotNull).select(col("a"), col("b")),
       rows.filter(col("doc").isNotNull).select(col("doc"), col("q")),
       "doc", "q", "a", "b", nBuckets, pairsPinned = true)
-    pending.foreach(d => new java.io.File(d, "_MERGED").createNewFile())
-    pending.length
   }
 
   /** Crash recovery for the keeper maintenance loop: fold every
-    * committed, unmarked `queue/b<id>` batch (a crash between queue
-    * commit and `_MERGED` leaves exactly these) into the curation
-    * state at `<dir>/cur`. Idempotent — [[graft.dedup.Dedup
-    * .curationMerge]] recomputes touched components from member rows,
-    * so refolding an already-half-applied batch lands the same bytes.
-    * Returns how many batches were recovered; safe on a fresh or
-    * absent queue. Crash-injection spec: StreamingSpec.
+    * committed, unmarked `queue/` dir (a crash between queue commit
+    * and the merged marker leaves exactly these) into the curation state at
+    * `<dir>/cur`. Idempotent — [[graft.dedup.Dedup.curationMerge]]
+    * recomputes touched components from member rows, so refolding an
+    * already-half-applied batch lands the same bytes. Returns how many
+    * batches were recovered; safe on a fresh or absent queue.
+    * Crash-injection spec: DedupAnnSpec.
     */
   def recoverPendingKeeperMerges(s: SparkSession, dir: String,
                                  nBuckets: Int): Int =
-    foldKeeperQueue(s, dir, nBuckets)
+    new DurableFoldQueue(s"$dir/queue")
+      .fold(s, "keeper-fold")(keeperFold(s, dir, nBuckets))
 
-  /** Fold every committed-but-unmerged label-queue partition in ONE
-    * [[graft.dedup.Dedup.labelsMerge]] over the union edge set —
-    * exact, because the merged labeling is a pure function of the
-    * union graph (edge arrival order is irrelevant to connected
-    * components) — then mark them all `_MERGED`. `_SUCCESS` gates on
-    * the WRITE having committed: a crash mid-write leaves a partial
-    * partition whose batch never committed either — the stream will
-    * redeliver and overwrite it, so folding (or failing on) the torn
-    * files here would be wrong twice over. Returns the number of
-    * partitions folded.
+  /** Fold committed label-queue dirs in ONE
+    * [[graft.dedup.Dedup.labelsMerge]] over the union edge set — exact,
+    * because the merged labeling is a pure function of the union graph
+    * (edge arrival order is irrelevant to connected components).
     */
-  /** Committed (`_SUCCESS`), unmerged label-queue partition dirs. */
-  private def pendingLabelParts(dir: String): Seq[java.io.File] = {
-    val queue = new java.io.File(s"$dir/labels_queue")
-    if (!queue.isDirectory) return Seq.empty
-    queue.listFiles().toSeq
-      .filter(f => f.isDirectory && f.getName.startsWith("batch="))
-      .filter(f => new java.io.File(f, "_SUCCESS").exists())
-      .filterNot(f => new java.io.File(f, "_MERGED").exists())
-      .sortBy(_.getName.stripPrefix("batch=").toLong)
-  }
-
-  private def foldLabelQueue(s: SparkSession, dir: String,
-                             nBuckets: Int): Int =
-    withJobDescription(s, "label-fold") {
-      foldLabelQueueInner(s, dir, nBuckets)
-    }
-
-  private def foldLabelQueueInner(s: SparkSession, dir: String,
-                                  nBuckets: Int): Int = {
-    val pending = pendingLabelParts(dir)
-    if (pending.isEmpty) return 0
-    // pairsPinned: the queue partitions ARE durable materialized edge
-    // state — consumers re-scan a tiny parquet leaf
+  private def labelFold(s: SparkSession, dir: String, nBuckets: Int)
+                       (parts: Seq[String]): Unit =
+    // pairsPinned: the queue dirs ARE durable materialized edge state
+    // — consumers re-scan a tiny parquet leaf
     graft.dedup.Dedup.labelsMerge(s"$dir/labels",
-      s.read.schema("a BIGINT, b BIGINT")
-        .parquet(pending.map(_.getPath): _*),
+      s.read.schema("a BIGINT, b BIGINT").parquet(parts: _*),
       "a", "b", nBuckets, pairsPinned = true)
-    pending.foreach(p => java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(p.getPath, "_MERGED"), ""))
-    pending.size
-  }
 
   /** Crash recovery for the async label fold: fold every committed
-    * edge-queue partition that has no `_MERGED` marker. Returns how
+    * `labels_queue/` dir that has no merged marker. Returns how
     * many were recovered. Safe on a fresh or absent queue.
     */
   def recoverPendingLabelMerges(s: SparkSession, dir: String,
                                 nBuckets: Int): Int =
-    foldLabelQueue(s, dir, nBuckets)
+    new DurableFoldQueue(s"$dir/labels_queue")
+      .fold(s, "label-fold")(labelFold(s, dir, nBuckets))
 
   /** Streaming ANN-join admission — the vector twin of
     * [[streamBandIndexIngest]]'s probe side, closing the same loop the
@@ -879,35 +862,22 @@ object StreamingJob {
   def streamAnnIndexProbe(corpus: DataFrame, delta: DataFrame,
                           queries: DataFrame, id: String, vec: String,
                           k: Int, nProbe: Int, nCells: Int,
-                          workDir: String, nFiles: Int = 4,
-                          filesPerTrigger: Int = 2): DataFrame = {
+                          workDir: String): DataFrame = {
     val s = corpus.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val run = new FileReplay(workDir)
+    val ix = s"${run.dir}/ix"
     // the index is FROZEN for the whole probe stream — centroids come
     // straight from the build (appends never change them), and the
     // cell listing is resolved once (partition discovery is a driver
     // job at real cell counts), not once per trigger
-    val cents = graft.similarity.Ann
-      .ivfIndexBuild(corpus, id, vec, nCells, s"$dir/ix")
-    graft.similarity.Ann.ivfIndexAppend(delta, id, vec, s"$dir/ix")
-    val assigned = graft.similarity.Ann.indexAssigned(s, s"$dir/ix")
-    queries.repartition(nFiles).write.parquet(s"$dir/in")
-    val stream = s.readStream.schema(queries.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.similarity.Ann.ivfTopKFromIndex(batch, id, vec,
-            s"$dir/ix", k, nProbe, cents = Some(cents),
-            assigned = Some(assigned), pruneCells = true)
-          .write.mode("overwrite").parquet(s"$dir/out/ingest=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    q.awaitTermination()
-    s.read.parquet(s"$dir/out").drop("ingest")
+    val cents =
+      graft.similarity.Ann.ivfIndexBuild(corpus, id, vec, nCells, ix)
+    graft.similarity.Ann.ivfIndexAppend(delta, id, vec, ix)
+    val assigned = graft.similarity.Ann.indexAssigned(s, ix)
+    run.probe(queries) { batch =>
+      graft.similarity.Ann.ivfTopKFromIndex(batch, id, vec, ix, k, nProbe,
+        cents = Some(cents), assigned = Some(assigned), pruneCells = true)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -958,21 +928,14 @@ object StreamingJob {
     */
   def streamStateInspection(keyed: Dataset[TxKeyed],
                             workDir: String): DataFrame = {
-    val s = keyed.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    val q = startLocked(runningUserTotals(keyed).toDF().writeStream
-      .format("noop")
-      .outputMode("update")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start())
-    q.awaitTermination()
+    val run = new FileReplay(workDir)
+    run.drain(runningUserTotals(keyed).toDF().writeStream
+      .format("noop").outputMode("update"))
     // (map|flatMap)GroupsWithState state layout: key = struct(value:
     // the group key), value = struct(groupState: the user state
     // struct, timeoutTimestamp) — the user's (n, total) tuple sits
     // under groupState
-    s.read.format("statestore").load(s"$dir/ckpt")
+    keyed.sparkSession.read.format("statestore").load(s"${run.dir}/ckpt")
       .select(col("key.value").as("id_usuario"),
         col("value.groupState._1").as("n_aprovadas"),
         round(col("value.groupState._2"), 2).as("total_aprovado"))
@@ -1193,46 +1156,28 @@ object StreamingJob {
     */
   def streamMltProbe(corpus: DataFrame, delta: DataFrame,
                      queries: DataFrame, id: String, text: String,
-                     k: Int, workDir: String, nFiles: Int = 4,
-                     filesPerTrigger: Int = 2): DataFrame = {
+                     k: Int, workDir: String): DataFrame = {
     val s = corpus.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    graft.text.Bm25.indexBuild(corpus, id, text, s"$dir/ix")
-    graft.text.Bm25.indexAppend(delta, id, text, s"$dir/ix")
+    val run = new FileReplay(workDir)
+    val ix = s"${run.dir}/ix"
+    graft.text.Bm25.indexBuild(corpus, id, text, ix)
+    graft.text.Bm25.indexAppend(delta, id, text, ix)
     // the index is FROZEN for the whole probe stream (built+appended
     // above, probes only from here on), so corpus stats are two
     // constants — read once, not once per trigger — and the postings
     // are pinned in cache for the stream's life (the hybrid probe's
     // static-leg discipline): each trigger's two postings consumers
     // hit memory instead of paying two parquet scans
-    val stats = graft.text.Bm25.readStats(s, s"$dir/ix")
-    val postings = s.read.parquet(s"$dir/ix/postings").cache()
+    val stats = graft.text.Bm25.readStats(s, ix)
+    val postings = s.read.parquet(s"$ix/postings").cache()
     postings.count()
-    queries.repartition(nFiles).write.parquet(s"$dir/in")
-    // 2 files per trigger — the maintenance loops' r9 admission-size
-    // default: the per-trigger fixed floor halves for an identical
-    // drained union (per-query probes are independent)
-    val stream = s.readStream.schema(queries.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // localized probe: the micro-batch query side is broadcast by
-        // contract, so its term set / bucket list / fan-out side fold
-        // to LocalRelations — see moreLikeThisFromIndex(localizeProbe)
-        graft.text.Bm25.moreLikeThisFromIndex(s, batch, id, text,
-            s"$dir/ix", k, stats = Some(stats), localizeProbe = true,
-            postings = Some(postings))
-          .write.mode("overwrite").parquet(s"$dir/out/ingest=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    // finally: a failed trigger must not leak the pinned postings
-    // into a long-lived shared session's cache
-    try q.awaitTermination() finally postings.unpersist()
-    s.read.parquet(s"$dir/out").drop("ingest")
+    run.probe(queries, release = postings.unpersist()) { batch =>
+      // localized probe: the micro-batch query side is broadcast by
+      // contract, so its term set / bucket list / fan-out side fold
+      // to LocalRelations — see moreLikeThisFromIndex(localizeProbe)
+      graft.text.Bm25.moreLikeThisFromIndex(s, batch, id, text, ix, k,
+        stats = Some(stats), localizeProbe = true, postings = Some(postings))
+    }
   }
 
   /** Streaming NOVELTY probe over the stored gram index — the
@@ -1247,27 +1192,14 @@ object StreamingJob {
     */
   def streamNoveltyProbe(corpus: DataFrame, queries: DataFrame,
                          id: String, text: String, n: Int,
-                         workDir: String, nFiles: Int = 4,
-                         filesPerTrigger: Int = 2): DataFrame = {
+                         workDir: String): DataFrame = {
     val s = corpus.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    graft.dedup.Boilerplate.gramIndexBuild(corpus, id, text, n, s"$dir/ix")
-    queries.repartition(nFiles).write.parquet(s"$dir/in")
-    val stream = s.readStream.schema(queries.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.dedup.Boilerplate.noveltyFromIndex(s, batch, id, text, n,
-            s"$dir/ix")
-          .write.mode("overwrite").parquet(s"$dir/out/ingest=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    q.awaitTermination()
-    s.read.parquet(s"$dir/out").drop("ingest")
+    val run = new FileReplay(workDir)
+    val ix = s"${run.dir}/ix"
+    graft.dedup.Boilerplate.gramIndexBuild(corpus, id, text, n, ix)
+    run.probe(queries) { batch =>
+      graft.dedup.Boilerplate.noveltyFromIndex(s, batch, id, text, n, ix)
+    }
   }
 
   /** Streaming EPOCH MATERIALIZATION — the sampling recipe's
@@ -1283,12 +1215,8 @@ object StreamingJob {
     * the shared `sample_source_epochs` oracle replays.
     */
   def streamEpochMaterialize(docs: DataFrame, id: String,
-                             sliceCol: String, workDir: String,
-                             nFiles: Int = 4,
-                             filesPerTrigger: Int = 2): DataFrame = {
-    val s = docs.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+                             sliceCol: String, workDir: String): DataFrame = {
+    val run = new FileReplay(workDir)
     val counts = docs.groupBy(col(sliceCol)).agg(count(lit(1)).as("n_l"))
     val eps = counts
       .crossJoin(broadcast(counts.agg(max(col("n_l")).as("n_max"))))
@@ -1296,10 +1224,7 @@ object StreamingJob {
         sqrt(col("n_max").cast("double") / col("n_l")).as("e"))
       .cache()
     eps.count() // frozen for the stream's life
-    val in = docs.select(col(id), col(sliceCol))
-    in.repartition(nFiles).write.parquet(s"$dir/in")
-    val stream = s.readStream.schema(in.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
+    val stream = run.replay(docs.select(col(id), col(sliceCol)))
     val u = graft.functions.Binning.unitHash(col(id))
     val out = stream.join(broadcast(eps), col(sliceCol) === col("__slice"))
       .withColumn("n_copies",
@@ -1307,9 +1232,7 @@ object StreamingJob {
           when(u < col("e") - floor(col("e")), 1L).otherwise(0L))
       .select(col(id), col(sliceCol),
         explode(sequence(lit(1L), col("n_copies"))).as("epoch_idx"))
-    val res = runToMemory(out)
-    eps.unpersist()
-    res
+    try runToMemory(out) finally eps.unpersist()
   }
 
   /** Streaming HYBRID retrieval probe — the fusion of
@@ -1347,25 +1270,23 @@ object StreamingJob {
     */
   def streamHybridProbe(docs: DataFrame, emb: DataFrame, id: String,
                         text: String, vec: String, split: Int, k: Int,
-                        workDir: String, nFiles: Int = 4,
-                        filesPerTrigger: Int = 2,
+                        workDir: String, filesPerTrigger: Int = 2,
                         ivfLeg: Option[(Int, Int)] = None): DataFrame = {
     val s = docs.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    graft.text.Bm25.indexBuild(docs.filter(col(id) >= split), id, text,
-      s"$dir/ix")
+    val run = new FileReplay(workDir)
+    val ix = s"${run.dir}/ix"
+    graft.text.Bm25.indexBuild(docs.filter(col(id) >= split), id, text, ix)
     // both legs are FROZEN for the whole probe stream: stats read
     // once, and the corpus-side embeddings are a static stream–static
     // join side (the batch query side is what broadcasts per trigger)
-    val stats = graft.text.Bm25.readStats(s, s"$dir/ix")
+    val stats = graft.text.Bm25.readStats(s, ix)
     // BOTH static legs are pinned for the stream's life — a designed
     // cache (same posture as the dashboard's scored table): every
     // micro-batch re-probes them, none should re-read parquet. One
     // materialization job covers each; per-trigger the lex leg's two
     // postings consumers and the vector leg's corpus side then run
     // from memory.
-    val postings = s.read.parquet(s"$dir/ix/postings").cache()
+    val postings = s.read.parquet(s"$ix/postings").cache()
     postings.count()
     // vector leg: brute force pins the corpus embeddings in cache and
     // scans them per trigger; the IVF leg builds the persisted index
@@ -1384,31 +1305,28 @@ object StreamingJob {
         // stream's life), cell listing resolved once: no trigger pays
         // centroid re-collection or partition discovery (driver jobs
         // at real cell counts)
+        val ivf = s"${run.dir}/ivf"
         val cents = graft.similarity.Ann.ivfIndexBuild(
-          emb.filter(col("vec_id") >= split), "vec_id", vec, nCells,
-          s"$dir/ivf")
-        val assigned = graft.similarity.Ann.indexAssigned(s, s"$dir/ivf")
+          emb.filter(col("vec_id") >= split), "vec_id", vec, nCells, ivf)
+        val assigned = graft.similarity.Ann.indexAssigned(s, ivf)
         ((q: DataFrame) => graft.similarity.Ann.ivfTopKFromIndex(
-          q, "vec_id", vec, s"$dir/ivf", k, nProbe, cents = Some(cents),
+          q, "vec_id", vec, ivf, k, nProbe, cents = Some(cents),
           assigned = Some(assigned), pruneCells = true),
           None)
     }
     val queries = docs.filter(col(id) < split)
       .join(emb.select(col("vec_id").as(id), col(vec)), id)
-    queries.repartition(nFiles).write.parquet(s"$dir/in")
-    // 2 files per trigger (the maintenance loops' r9 admission-size
-    // default): per trigger this probe pays a fixed floor — the lex
-    // leg's term collect + pruned-postings broadcast, the vector
-    // leg's query broadcast, one fused output commit — so halving
-    // the trigger count halves the floor for an identical drained
-    // union (per-query fusion is independent; spec-pinned vs the
-    // one-shot batch fusion under both cadences)
-    val stream = s.readStream.schema(queries.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    // 2 files per trigger by default (the maintenance loops' r9
+    // admission-size default): per trigger this probe pays a fixed
+    // floor — the lex leg's term collect + pruned-postings broadcast,
+    // the vector leg's query broadcast, one fused output commit — so
+    // halving the trigger count halves the floor for an identical
+    // drained union (per-query fusion is independent; spec-pinned vs
+    // the one-shot batch fusion under both cadences). The pinned
+    // static legs are released however the stream ends.
+    run.probe(queries, filesPerTrigger,
+      release = { postings.unpersist(); pinnedCorpus.foreach(_.unpersist()) }) {
+      batch =>
         // ONE micro-batch source scan per trigger: both legs BROADCAST
         // the query batch (driver-memory-bounded by design — that is
         // the probe contract), so collect it once and derive each leg
@@ -1422,21 +1340,13 @@ object StreamingJob {
         val local = s.createDataFrame(
           java.util.Arrays.asList(batch.collect(): _*), batch.schema)
         val lex = graft.text.Bm25.moreLikeThisFromIndex(s, local, id,
-            text, s"$dir/ix", k, stats = Some(stats),
+            text, ix, k, stats = Some(stats),
             localizeProbe = true, postings = Some(postings))
           .select(col("qid"), col("doc_id").as("doc"), col("rank"))
         val v = vecTopK(local.select(col(id).as("vec_id"), col(vec)))
           .select(col("qid"), col("vid").as("doc"), col("rank"))
         graft.text.Retrieval.rrfFuse(lex, v, k)
-          .write.mode("overwrite").parquet(s"$dir/out/ingest=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    // finally: a failed trigger must not leak the pinned static legs
-    // into a long-lived shared session's cache
-    try q.awaitTermination()
-    finally { postings.unpersist(); pinnedCorpus.foreach(_.unpersist()) }
-    s.read.parquet(s"$dir/out").drop("ingest")
+    }
   }
 
   /** Streaming boilerplate-strip admission — the cleaning stage of
@@ -1452,33 +1362,17 @@ object StreamingJob {
     * what the oracle replays.
     */
   def streamBoilerStrip(docs: DataFrame, id: String, text: String,
-                        n: Int, minDf: Int, split: Int, workDir: String,
-                        nFiles: Int = 4,
-                        filesPerTrigger: Int = 2): DataFrame = {
-    val s = docs.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+                        n: Int, minDf: Int, split: Int,
+                        workDir: String): DataFrame = {
+    val run = new FileReplay(workDir)
     val boiler = graft.dedup.Dedup.commonNgrams(
         docs.filter(col(id) >= split), id, text, n, minDf)
       .select(col("ngram")).cache()
     boiler.count()
-    val queries = docs.filter(col(id) < split)
-    queries.repartition(nFiles).write.parquet(s"$dir/in")
-    val stream = s.readStream.schema(queries.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.dedup.Boilerplate
-          .stripWithBoiler(batch, id, text, n, boiler)
-          .write.mode("overwrite").parquet(s"$dir/out/ingest=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    q.awaitTermination()
-    boiler.unpersist()
-    s.read.parquet(s"$dir/out").drop("ingest")
+    run.probe(docs.filter(col(id) < split), release = boiler.unpersist()) {
+      batch =>
+        graft.dedup.Boilerplate.stripWithBoiler(batch, id, text, n, boiler)
+    }
   }
 
   /** Streaming perplexity admission — the LM member of the admission
@@ -1496,11 +1390,8 @@ object StreamingJob {
     */
   def streamPerplexityGate(ref: DataFrame, arriving: DataFrame,
                            id: String, text: String, threshold: Double,
-                           workDir: String, nFiles: Int = 4,
-                           filesPerTrigger: Int = 2): DataFrame = {
-    val s = ref.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+                           workDir: String): DataFrame = {
+    val run = new FileReplay(workDir)
     val bigrams = graft.text.LangModel.bigramCounts(ref, text).cache()
     // the ONE shared definition of the context totals (streamPplBuckets
     // and the batch scorer use it too) — a hand-rolled twin here could
@@ -1508,25 +1399,13 @@ object StreamingJob {
     val c1 = graft.text.LangModel.derivedContextTotals(bigrams).cache()
     c1.count()
     val v = graft.text.LangModel.vocabSize(ref, text)
-    val queries = arriving
-    queries.repartition(nFiles).write.parquet(s"$dir/in")
-    val stream = s.readStream.schema(queries.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    run.probe(arriving, release = { bigrams.unpersist(); c1.unpersist() }) {
+      batch =>
         graft.text.LangModel
           .perplexity(batch, id, text, bigrams, v, threshold,
             contextTotals = Some(c1))
           .filter(col("admit"))
-          .write.mode("overwrite").parquet(s"$dir/out/ingest=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    q.awaitTermination()
-    bigrams.unpersist(); c1.unpersist()
-    s.read.parquet(s"$dir/out").drop("ingest")
+    }
   }
 
   /** Streaming language-ID — classify at arrival rate: every
@@ -1541,12 +1420,8 @@ object StreamingJob {
     */
   def streamLangidClassify(staticDocs: DataFrame, arriving: DataFrame,
                            id: String, text: String, langCol: String,
-                           langs: Seq[String], workDir: String,
-                           nFiles: Int = 4,
-                           filesPerTrigger: Int = 2): DataFrame = {
-    val s = staticDocs.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+                           langs: Seq[String], workDir: String): DataFrame = {
+    val run = new FileReplay(workDir)
     val models = graft.text.LangClassifier
       .fit(staticDocs, text, langCol, langs).map { m =>
         val bg = m.bigrams.cache()
@@ -1554,27 +1429,17 @@ object StreamingJob {
         c1.count()
         m.copy(bigrams = bg, c1 = c1)
       }
-    arriving.repartition(nFiles).write.parquet(s"$dir/in")
-    val stream = s.readStream.schema(arriving.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.text.LangClassifier.classify(batch, id, text, models)
-          .join(batch.select(col(id).as("doc_id"),
-            col(langCol).as("lang")), Seq("doc_id"))
-          .select(col("doc_id"), col("lang"),
-            col("pred").as("pred_lang"),
-            when(col("pred").isNotNull, col("pred") === col("lang"))
-              .as("correct"))
-          .write.mode("overwrite").parquet(s"$dir/out/ingest=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    q.awaitTermination()
-    models.foreach { m => m.bigrams.unpersist(); m.c1.unpersist(); () }
-    s.read.parquet(s"$dir/out").drop("ingest")
+    run.probe(arriving, release = models.foreach { m =>
+      m.bigrams.unpersist(); m.c1.unpersist(); ()
+    }) { batch =>
+      graft.text.LangClassifier.classify(batch, id, text, models)
+        .join(batch.select(col(id).as("doc_id"),
+          col(langCol).as("lang")), Seq("doc_id"))
+        .select(col("doc_id"), col("lang"),
+          col("pred").as("pred_lang"),
+          when(col("pred").isNotNull, col("pred") === col("lang"))
+            .as("correct"))
+    }
   }
 
   /** Streaming CCNet bucket labeling — calibrate once, label at
@@ -1593,12 +1458,8 @@ object StreamingJob {
     */
   def streamPplBuckets(ref: DataFrame, calibration: DataFrame,
                        arriving: DataFrame, id: String, text: String,
-                       threshold: Double, workDir: String,
-                       nFiles: Int = 4,
-                       filesPerTrigger: Int = 2): DataFrame = {
-    val s = ref.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+                       threshold: Double, workDir: String): DataFrame = {
+    val run = new FileReplay(workDir)
     val bigrams = graft.text.LangModel.bigramCounts(ref, text).cache()
     val c1 = graft.text.LangModel.derivedContextTotals(bigrams).cache()
     c1.count()
@@ -1611,25 +1472,14 @@ object StreamingJob {
           length(col(text)).cast("long").as("chars")), Seq("doc_id"))
     val (b1, b2) = graft.text.PplBuckets.cutoffs(
       graft.text.PplBuckets.binned(scoredWithChars(calibration)), "chars")
-    arriving.repartition(nFiles).write.parquet(s"$dir/in")
-    val stream = s.readStream.schema(arriving.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    run.probe(arriving, release = { bigrams.unpersist(); c1.unpersist() }) {
+      batch =>
         graft.text.PplBuckets.binned(scoredWithChars(batch))
           .withColumn("bucket",
             graft.text.PplBuckets.label(col("bin"), b1, b2))
           .select(col("doc_id"), col("nll"), col("bin"), col("chars"),
             col("bucket"))
-          .write.mode("overwrite").parquet(s"$dir/out/ingest=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    q.awaitTermination()
-    bigrams.unpersist(); c1.unpersist()
-    s.read.parquet(s"$dir/out").drop("ingest")
+    }
   }
 
   /** Streaming DSIR admission — the importance-weight gate run at
@@ -1649,33 +1499,18 @@ object StreamingJob {
     */
   def streamDsirAdmission(staticDocs: DataFrame, arriving: DataFrame,
                           id: String, text: String, targetLang: String,
-                          threshold: Double, workDir: String,
-                          nFiles: Int = 4,
-                          filesPerTrigger: Int = 2): DataFrame = {
-    val s = staticDocs.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+                          threshold: Double, workDir: String): DataFrame = {
+    val run = new FileReplay(workDir)
     val tgt = staticDocs.filter(col("lang") === targetLang)
     val tc = graft.text.Dsir.featureCounts(tgt, id, text).cache()
     val sc = graft.text.Dsir.featureCounts(staticDocs, id, text).cache()
     val tTot = graft.text.Dsir.featureTotal(tc)
     val sTot = graft.text.Dsir.featureTotal(sc)
-    arriving.repartition(nFiles).write.parquet(s"$dir/in")
-    val stream = s.readStream.schema(arriving.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    run.probe(arriving, release = { tc.unpersist(); sc.unpersist() }) {
+      batch =>
         graft.text.Dsir.weights(batch, id, text, tc, tTot, sc, sTot)
           .filter(col("logratio") > threshold)
-          .write.mode("overwrite").parquet(s"$dir/out/ingest=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    q.awaitTermination()
-    tc.unpersist(); sc.unpersist()
-    s.read.parquet(s"$dir/out").drop("ingest")
+    }
   }
 
   case class ShardDoc(shard: Int, doc_id: Long, n_tokens: Int)

@@ -44,7 +44,9 @@ final class ProgressRecorder(capacity: Int = 10000)
       Option(p.name).getOrElse(p.id.toString), p.batchId,
       p.numInputRows, finite(p.inputRowsPerSecond),
       finite(p.processedRowsPerSecond),
-      p.durationMs.asScala.values.map(_.longValue).sum,
+      // triggerExecution spans the whole trigger; the other entries
+      // are phases inside it, so summing them would double-count
+      Option(p.durationMs.get("triggerExecution")).fold(0L)(_.longValue),
       p.stateOperators.map(_.numRowsTotal).sum))
     while (buf.size > capacity) buf.poll()
   }

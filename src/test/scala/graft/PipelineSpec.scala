@@ -132,4 +132,20 @@ class PipelineSpec extends SparkSpec {
     assert(approved > 0 && approved <= n)
     assert(!m("avg_score").asInstanceOf[Double].isNaN)
   }
+
+  test("zScorePerRow: a payer whose values are all equal gets a null " +
+    "z-score under ANSI, not DIVIDE_BY_ZERO") {
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try {
+      val scored = Seq(("t1", "u1", 5.0), ("t2", "u1", 5.0),
+        ("t3", "u2", 1.0), ("t4", "u2", 3.0))
+        .toDF("id_transacao", "id_usuario_pagador", "valor_transacao")
+      val z = graft.analytics.Dashboard.zScorePerRow(scored)
+        .as[(String, Option[Double])].collect().toMap
+      assert(z == Map("t1" -> None, "t2" -> None,
+        "t3" -> Some(-0.7071), "t4" -> Some(0.7071)), s"z-scores: $z")
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

@@ -200,6 +200,18 @@ class StreamingSpec extends SparkSpec {
       }
       assert(Set((0L, 3L), (1L, 1L)).subsetOf(got),
         s"expected both batches recorded, got $got")
+      // each recorded duration is the trigger's own wall time,
+      // triggerExecution — the other durationMs entries are phases
+      // inside it, so a sum over all entries would count them twice
+      val recorded = rec.snapshot(spark)
+        .filter(col("query") === "telemetry_probe" && col("inputRows") > 0)
+        .select("batchId", "batchDurationMs")
+        .as[(Long, Long)].collect().toSet
+      val triggerMs = q.recentProgress.filter(_.numInputRows > 0)
+        .map(p => (p.batchId, p.durationMs.get("triggerExecution").longValue))
+        .toSet
+      assert(recorded.nonEmpty && recorded == triggerMs,
+        s"recorded durations $recorded != triggerExecution $triggerMs")
     } finally rec.detach(spark)
   }
 
@@ -681,5 +693,37 @@ class StreamingSpec extends SparkSpec {
     val e2 = intercept[IllegalStateException](boom.failIfBroken())
     assert(!(e2 eq e) && (e2.getCause eq e.getCause),
       "each rethrow site must wrap the one stored cause freshly")
+  }
+
+  test("DurableFoldQueue: one fold takes every committed dir whatever its " +
+    "name, skips a torn dir, and a failed merge marks nothing") {
+    val root = Files.createTempDirectory("graft_dfq").toString
+    // b10 sorts before b2 by name; listing must not care
+    Seq("b2", "b10").foreach(b => Seq(1L).toDF("a").write.parquet(s"$root/$b"))
+    val torn = new java.io.File(s"$root/b3")
+    torn.mkdirs()
+    Files.writeString(
+      java.nio.file.Paths.get(torn.getPath, "part-torn.parquet"), "junk")
+    def merged(b: String) = new java.io.File(s"$root/$b/_MERGED").exists()
+    val queue = new StreamingJob.DurableFoldQueue(root)
+    // a merge that throws marks nothing, so the next fold retries
+    intercept[IllegalStateException] {
+      queue.fold(spark, "dfq-spec")(_ =>
+        throw new IllegalStateException("merge died"))
+    }
+    assert(!merged("b2") && !merged("b10"))
+    var got = Seq.empty[String]
+    var desc: String = null
+    assert(queue.fold(spark, "dfq-spec") { dirs =>
+      got = dirs
+      desc = spark.sparkContext.getLocalProperty("spark.job.description")
+    } == 2)
+    assert(got.map(p => new java.io.File(p).getName).toSet == Set("b2", "b10"),
+      s"one fold must receive both committed dirs: $got")
+    assert(desc == "dfq-spec", s"merge ran under job description $desc")
+    assert(merged("b2") && merged("b10") && !merged("b3"))
+    // nothing pending any more: the next fold never calls its merge
+    assert(queue.fold(spark, "dfq-spec")(_ => fail("nothing is pending")) == 0)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 }
