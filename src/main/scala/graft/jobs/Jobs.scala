@@ -12,16 +12,32 @@ import graft.etl.ScoringPipeline
   */
 object Jobs {
 
+  /** The `file:` scheme's Hadoop implementations, as Spark settings:
+    * [[graft.io.NioLocalFileSystem]] and [[graft.io.NioLocalFs]], the
+    * stock local file system minus its `chmod`/`readlink` process
+    * launches. Every session of this engine (and the test session)
+    * takes exactly these. Hadoop caches the first `file:` FileSystem
+    * per JVM, so they must be set before anything touches a local path.
+    */
+  val localFsConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[graft.io.NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+      classOf[graft.io.NioLocalFs].getName)
+
   /** Deploy-session builder carrying the reference's session-level
     * choices (SURVEY.md §4: streaming_etl.py:12-19) plus this
     * engine's extensions: Kryo serializer, modern Kafka offset
-    * fetching, native functions + TopK strategy/rewrite. AQE is left
-    * default-ON — the reference commented it out, but Spark disables
-    * it inside stateful streaming automatically, so keeping it costs
-    * streaming nothing and buys batch runtime re-planning.
+    * fetching, native functions + TopK strategy/rewrite, the fork-free
+    * local file system. AQE is left default-ON for batch runtime
+    * re-planning — the reference commented it out. Spark 4 turns it
+    * off in stateful and continuous streams only; a stateless
+    * micro-batch stream keeps it and pays a re-explain of the adaptive
+    * plan every trigger, so `StreamingJob.startFanout`, whose batches
+    * never shuffle, starts its stream without it.
     */
   def sessionBuilder(appName: String, master: String): SparkSession.Builder =
     SparkSession.builder().appName(appName).master(master)
+      .config(localFsConf)
       .config("spark.serializer",
         "org.apache.spark.serializer.KryoSerializer")
       .config("spark.sql.streaming.kafka.useDeprecatedOffsetFetching",

@@ -33,6 +33,24 @@ object StreamingJob {
   private def startLocked(f: => StreamingQuery): StreamingQuery =
     confLock.synchronized(f)
 
+  /** Start a query with `overrides` on `spark`'s conf: a query snapshots
+    * its session's conf at start(), so set→start→restore scopes them to
+    * that one query, which still runs on (and reports its progress to
+    * the listeners of) `spark` itself. Under [[confLock]]: two
+    * concurrent calls otherwise interleave (B captures A's temporary
+    * value as its "previous" and pins the session to it permanently).
+    */
+  private def startWith(spark: SparkSession, overrides: Map[String, String])(
+      f: => StreamingQuery): StreamingQuery = confLock.synchronized {
+    val prev = overrides.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Run a streaming DataFrame to completion into a uniquely-named
     * memory sink (T3 append / complete), returning the result as a
     * self-contained local DataFrame. The memory sink's rows already
@@ -64,21 +82,11 @@ object StreamingJob {
       "spark.sql.streaming.stateStore.minDeltasForSnapshot" -> "100") ++
       extraConfs ++
       shufflePartitions.map("spark.sql.shuffle.partitions" -> _.toString)
-    // set→start→restore under a lock: two concurrent calls otherwise
-    // interleave (B captures A's temporary value as its "previous" and
-    // pins the session to it permanently)
-    val q = confLock.synchronized {
-      val prev = overrides.keys.map(k => k -> spark.conf.getOption(k)).toMap
-      overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
-        stream.writeStream
-          .format("memory").queryName(name).outputMode(mode)
-          .trigger(Trigger.AvailableNow())
-          .start()
-      } finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+    val q = startWith(spark, overrides) {
+      stream.writeStream
+        .format("memory").queryName(name).outputMode(mode)
+        .trigger(Trigger.AvailableNow())
+        .start()
     }
     q.awaitTermination()
     val sink = spark.table(name)
@@ -214,11 +222,24 @@ object StreamingJob {
     * duplicates; keyed snapshot (O4) and recency index (O5) are
     * id-keyed, hence naturally idempotent.
     * streaming_etl.py:179-263 re-expressed.
+    *
+    * The query starts with AQE off (the caller's session keeps it).
+    * Spark 4 keeps AQE in a stateless micro-batch stream's plan, and
+    * every batch then re-explains the adaptive plan for its UI update —
+    * 11% of the stream thread's samples at 500 events/s (thread dumps,
+    * 4 cores), none with AQE off — while the plan has nothing to
+    * re-plan: the dims are broadcast explicitly and the sinks write one
+    * persisted batch, so no exchange is ever added.
+    * The override is scoped by [[startWith]], not by a cloned session:
+    * a query started on a clone belongs to the clone's
+    * StreamingQueryManager, so `spark.streams` and its listeners (the
+    * [[ProgressRecorder]] telemetry) would never see it.
     */
   def startFanout(scored: DataFrame, factsDir: String, scoresDir: String,
                   checkpointDir: String, keyCol: String = "id_transacao",
                   tsCol: String = "data_horario"): StreamingQuery =
-    startLocked(scored.writeStream
+    startWith(scored.sparkSession,
+      Map("spark.sql.adaptive.enabled" -> "false"))(scored.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (df: DataFrame, batchId: Long) =>

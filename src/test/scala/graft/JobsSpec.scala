@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLAdaptiveExecutionUpdate
 import org.apache.spark.sql.functions._
 import graft.etl.TestdataAdapter
 import graft.jobs.Jobs
@@ -62,6 +64,64 @@ class JobsSpec extends SparkSpec {
       scores.columns.length == 5) // 4 score cols + batch partition
     assert(StreamingJob.KeyedStore.hashes.size == 1000)
     assert(StreamingJob.KeyedStore.topN(5).size == 5)
+  }
+
+  test("fan-out stream plans without AQE; the caller's session keeps it") {
+    // Bus events are counted per window, the window being the last
+    // fence job the listener has seen start: the listener thread sees
+    // events in posting order, so a window holds exactly the events
+    // posted between its fence and the next one.
+    val window = new java.util.concurrent.atomic.AtomicReference("")
+    val fences = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val adaptive = scala.collection.concurrent.TrieMap.empty[String, Int]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description")))
+          .filter(_.startsWith("fence:")).foreach { f =>
+            window.set(f); fences.put(f)
+          }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLAdaptiveExecutionUpdate =>
+          adaptive.updateWith(window.get)(n => Some(n.getOrElse(0) + 1))
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    def fence(name: String): Unit = {
+      sc.setJobDescription(s"fence:$name")
+      try sc.parallelize(Seq(1), 1).count() // an RDD job: no SQL, no AQE
+      finally sc.setJobDescription(null)
+      assert(fences.poll(60, java.util.concurrent.TimeUnit.SECONDS) ==
+        s"fence:$name", s"listener never saw fence $name")
+    }
+    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
+    val dir = "/root/testdata/sf0.001"
+    val tmp = Files.createTempDirectory("graft_job_aqe").toString
+    sc.addSparkListener(listener)
+    try {
+      fence("stream")
+      val q = Jobs.startStreamingScoring(
+        TestdataAdapter.transactionsStream(spark, dir),
+        TestdataAdapter.users(spark, dir),
+        TestdataAdapter.regions(spark, dir),
+        tmp, TestdataAdapter.eventLimitArms)
+      // still the caller's query: its streams manager (and so any
+      // progress listener on it) sees it
+      assert(spark.streams.get(q.id) != null)
+      q.processAllAvailable(); q.stop()
+      fence("caller")
+      // a shuffle on the caller's session still plans adaptively
+      spark.range(1000).groupBy((col("id") % 7).as("k")).count().collect()
+      fence("end")
+    } finally sc.removeSparkListener(listener)
+    assert(spark.read.parquet(s"$tmp/facts").count() == 1000)
+    val updates = adaptive.withDefaultValue(0)
+    assert(updates("fence:stream") == 0,
+      s"fan-out stream posted ${updates("fence:stream")} AQE plan updates")
+    assert(updates("fence:caller") > 0,
+      "the caller's session no longer plans adaptively")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == aqeBefore)
   }
 
   test("pivot crosstab (A10 .pivot form) matches conditional-agg form") {

@@ -12,6 +12,8 @@ object TestSession {
       .config("spark.sql.shuffle.partitions", 4)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the engine's local file system, so every spec runs on it
+      .config(graft.jobs.Jobs.localFsConf)
       // exercise the Catalyst extension point for the native functions
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.warehouse.dir",
